@@ -14,4 +14,9 @@ Everything here derives from public knowledge only: the Apache Spark
 published OLAP/crawl literature.
 """
 
+from . import zipcache as _zipcache
+
+# stop every Python task re-reading each zip on sys.path (see zipcache)
+_zipcache.install()
+
 __version__ = "0.1.0"

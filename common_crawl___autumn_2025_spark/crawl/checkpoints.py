@@ -138,6 +138,8 @@ class CheckpointStore:
             table_meta[name] = {
                 "rows": sum(p["rows"] for p in parts),
                 "partitions": parts,
+                # read_table pins it: no schema-inference job on read
+                "schema": tables[name].schema.toDDL(),
             }
         committed_below = [
             r for r in self._committed_rounds() if r < round_no
@@ -208,16 +210,19 @@ class CheckpointStore:
             return json.load(f)
 
     def read_table(self, round_no: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir(round_no, name))
-
-    def _table_dir(self, round_no: int, name: str) -> str:
-        """Physical directory of a table — resolved through the
-        manifest's ``path`` pointer when present (Iceberg semantics:
-        metadata points at data; compaction swaps the pointer, never
-        mutates a directory in place)."""
-        m = self.read_manifest(round_no)
-        rel = m["tables"].get(name, {}).get("path", name)
-        return os.path.join(self._round_dir(round_no), rel)
+        """A committed table, read through the manifest: its ``path``
+        pointer when present (Iceberg semantics: metadata points at
+        data; compaction swaps the pointer, never mutates a directory
+        in place) and its recorded schema, which spares Spark the
+        one-task footer-inference job a schema-less parquet read
+        launches. Manifests written before schemas were recorded
+        fall back to inference."""
+        meta = self.read_manifest(round_no)["tables"].get(name, {})
+        path = os.path.join(self._round_dir(round_no), meta.get("path", name))
+        reader = self.spark.read
+        if "schema" in meta:
+            reader = reader.schema(meta["schema"])
+        return reader.parquet(path)
 
     def delta_table_paths(self, name: str, upto: int | None = None) -> list[str]:
         """Directories of a per-round-delta table for all committed
@@ -374,6 +379,7 @@ class CheckpointStore:
             os.rename(compact_tmp, os.path.join(base_dir, compact_rel))
             parts = _dir_metrics(os.path.join(base_dir, compact_rel))
             m["tables"]["matches"] = {
+                **m["tables"].get("matches", {}),
                 "rows": sum(p["rows"] for p in parts),
                 "partitions": parts,
                 "path": compact_rel,

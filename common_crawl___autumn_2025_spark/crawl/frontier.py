@@ -161,9 +161,14 @@ def seeds_frontier(spark: SparkSession, seeds: list[str]) -> DataFrame:
     reference's contract — ``company_number_scrape.py:13,43``).
     Canonicalization runs DISTRIBUTED (Arrow pass): a driver loop over
     the seed list is ~0.1 ms/seed — minutes at the 10^7-seed design
-    point."""
+    point. The seed list enters through Arrow (a pandas frame), not
+    pickled rows, so building it runs no Python worker stage."""
     raw = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(seeds)], "seed_id long, raw string"
+        pd.DataFrame(
+            {"seed_id": pd.Series(range(len(seeds)), dtype="int64"),
+             "raw": pd.Series(seeds, dtype=object)}
+        ),
+        "seed_id long, raw string",
     )
 
     def canon(batches):
@@ -412,10 +417,17 @@ class CrawlEngine:
         if n == 0:
             return df
         if n <= self.matched_isin_limit:
-            return df.where(~F.col("seed_id").isin(list(self._matched_ids)))
+            # one SQL parse: Column.isin costs two py4j round trips per
+            # literal (~0.15 s per call at a few hundred ids), and this
+            # runs several times per round on the driver's critical path
+            ids = ",".join(map(str, sorted(self._matched_ids)))
+            return df.where(F.expr(f"seed_id NOT IN ({ids})"))
         if getattr(self, "_matched_df_n", None) != n:
             self._matched_df = self.spark.createDataFrame(
-                [(i,) for i in sorted(self._matched_ids)], "seed_id long"
+                pd.DataFrame(
+                    {"seed_id": pd.Series(sorted(self._matched_ids), dtype="int64")}
+                ),
+                "seed_id long",
             )
             self._matched_df_n = n
         return df.join(
@@ -437,7 +449,8 @@ class CrawlEngine:
         exactly once, bypassing the matched gate like retry_next
         does. Only valid after run() folded the round's delta into
         the mirror; equality is pytest-pinned across the replay grid."""
-        assert self._mirror_valid, "fast count requires the driver mirror"
+        if not self._mirror_valid:
+            raise RuntimeError("fast count requires the driver mirror")
         spec = self.spec
         base = fetched.where(
             (F.col("status") == 200) & (F.col("depth") < spec.max_depth)
@@ -829,7 +842,8 @@ class CrawlEngine:
         paths = self.store.delta_table_paths("matches", upto)
         if not paths:
             return self.spark.createDataFrame([], MATCH_SCHEMA)
-        return self.spark.read.parquet(*paths)
+        # the pinned schema spares a footer-inference job per call
+        return self.spark.read.schema(MATCH_SCHEMA).parquet(*paths)
 
     # -- pipelined commit helpers ------------------------------------------
 
@@ -1052,20 +1066,21 @@ class CrawlEngine:
                 # filter nor its first-row window changes the result)
                 # — so read the hit rows straight off the checkpointed
                 # fetch: a narrow single-stage collect instead of the
-                # delta's window+filter job. Rows collected are
-                # bounded by this round's hit pages (≥ the delta's
-                # 1-per-seed, same order of magnitude); the
-                # matched_mirror_limit invalidation above still caps
+                # delta's window+filter job. Hits of already-mirrored
+                # seeds are dropped before the collect (an isin or a
+                # broadcast of a local relation, no extra job), so the
+                # rows collected are bounded by this round's NEW
+                # matched seeds' hit pages even when early_exit=False
+                # keeps re-fetching satisfied seeds; the
+                # matched_mirror_limit invalidation below still caps
                 # driver state at the design point.
                 if self._mirror_valid:
+                    hits = fetched.where(
+                        (F.col("status") == 200)
+                        & (F.col("target_number") != "")
+                    ).select("seed_id")
                     new_ids = [
-                        r[0]
-                        for r in fetched.where(
-                            (F.col("status") == 200)
-                            & (F.col("target_number") != "")
-                        )
-                        .select("seed_id")
-                        .collect()
+                        r[0] for r in self._filter_unmatched(hits, None).collect()
                     ]
                     self._matched_ids.update(new_ids)
                     if len(self._matched_ids) > self.matched_mirror_limit:

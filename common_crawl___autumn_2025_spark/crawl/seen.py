@@ -243,7 +243,9 @@ class SeenSet:
 
     def exact_df(self) -> DataFrame:
         if self._has_exact():
-            return self.spark.read.parquet(self.exact_path)
+            # pinned schema: a schema-less read launches a one-task
+            # footer-inference job, and this runs every round
+            return self.spark.read.schema(SEEN_SCHEMA).parquet(self.exact_path)
         return self.spark.createDataFrame([], SEEN_SCHEMA)
 
     def has_state(self) -> bool:

@@ -12,6 +12,10 @@ configuration:
   test scale (AQE coalesces down when partitions are small),
 - UTC session timezone so timestamp semantics match the DuckDB
   oracle.
+
+Python workers need no setting here: the package ``__init__`` installs
+the worker zip cache (``zipcache.py``), which stops every Python task
+re-reading ``pyspark.zip`` on CPython <= 3.12.
 """
 
 from __future__ import annotations
